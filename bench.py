@@ -190,7 +190,7 @@ def main() -> None:
         # post-postings stages, so they don't sum to build_sec)
         build_stages = {}
         for stage in ("docs", "postings", "term_stats", "block_max",
-                      "segments", "posting_lists"):
+                      "posting_lists"):
             mf = os.path.join(idx_dir, stage, "_manifest.json")
             if os.path.exists(mf):
                 with open(mf) as f:

@@ -7,6 +7,7 @@ scores within rtol 1e-9, calibrated probabilities within rtol 1e-9.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,6 +29,8 @@ from bayesian_bm25_spark.sources.webcorpus import (
 )
 from tests.conftest import SIX_DOC_QUERIES, SIX_DOCS
 
+ZIPF_N_DOCS = 3000
+
 
 def pages_df_from_texts(spark, texts):
     rows = [
@@ -42,6 +45,43 @@ def six_index(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx_six"))
     pages = pages_df_from_texts(spark, SIX_DOCS)
     return build_index(spark, pages, path, IndexConfig(base_rate="auto"))
+
+
+@pytest.fixture(scope="module")
+def zipf_index(spark, tmp_path_factory):
+    """``zipf_index(build_compressed)``: a 3000-doc Zipf corpus built
+    once per build path and module — big enough for multi-split reads
+    and head terms spanning many map-side batches."""
+    built = {}
+
+    def get(build_compressed: bool):
+        if build_compressed not in built:
+            built[build_compressed] = build_index(
+                spark,
+                generate_pages(spark, ZIPF_N_DOCS, seed=11, num_partitions=8),
+                str(tmp_path_factory.mktemp("idx_zipf")),
+                IndexConfig(
+                    alpha=1.0, beta=1.0, base_rate=0.05,
+                    build_compressed=build_compressed,
+                ),
+            )
+        return built[build_compressed]
+
+    return get
+
+
+def expected_posting_lists(postings) -> dict:
+    """term → (df, payload): the numpy codec applied to each term's rows
+    of the flat postings checkpoint, in doc_id order."""
+    from bayesian_bm25_spark.kernel.postings_codec import encode_posting_list
+
+    flat = postings.select("term", "doc_id", "tf", "impact").toPandas()
+    return {
+        t: (len(g), encode_posting_list(
+            g["doc_id"].to_numpy(), g["tf"].to_numpy(), g["impact"].to_numpy()
+        ))
+        for t, g in flat.sort_values(["term", "doc_id"]).groupby("term")
+    }
 
 
 @pytest.fixture(scope="module")
@@ -73,92 +113,137 @@ class TestBuild:
         assert after == before
 
     def test_streamed_compressed_lists_equal_checkpointed(self, spark, tmp_path):
-        """The default streamed codec path (phase 1 → shuffle → merge,
-        one write) must produce byte-identical posting lists to the old
-        two-checkpoint layout (checkpoint_segments=True)."""
+        """The streamed codec path (map-side partials → one shuffle of
+        compressed bytes → merge, one write) must produce posting lists
+        byte-identical to the numpy codec applied to the checkpointed
+        flat postings, and write no intermediate ``segments`` stage."""
         import os
 
         pages = pages_df_from_texts(spark, SIX_DOCS)
-        cfg = dict(alpha=1.0, beta=1.0)
-        a = build_index(
-            spark, pages, str(tmp_path / "pl_stream"),
-            IndexConfig(checkpoint_segments=False, **cfg),
-        )
-        b = build_index(
-            spark, pages, str(tmp_path / "pl_ckpt"),
-            IndexConfig(checkpoint_segments=True, **cfg),
-        )
-        rows_a = {(r["term"], r["df"], bytes(r["payload"]))
-                  for r in a.posting_lists.collect()}
-        rows_b = {(r["term"], r["df"], bytes(r["payload"]))
-                  for r in b.posting_lists.collect()}
-        assert rows_a == rows_b and len(rows_a) > 0
-        # streamed path writes no segments dir; checkpointed path does
-        assert not os.path.exists(str(tmp_path / "pl_stream" / "segments"))
-        assert os.path.exists(str(tmp_path / "pl_ckpt" / "segments"))
+        path = tmp_path / "pl_stream"
+        idx = build_index(spark, pages, str(path), IndexConfig(alpha=1.0, beta=1.0))
+        got = {r["term"]: (r["df"], bytes(r["payload"]))
+               for r in idx.posting_lists.collect()}
+        assert got == expected_posting_lists(idx.postings) and len(got) > 0
+        assert not os.path.exists(str(path / "segments"))
 
-    def test_mapside_partials_equal_salted_streamed_zipf(self, spark, tmp_path):
-        """The map-side partial encode (new default: per-batch numpy
-        sort + varbyte partials, ONE compressed-bytes shuffle) must be
-        byte-identical to the salted row-shuffle streamed path on a
-        Zipf corpus big enough for multi-split reads and multi-batch
-        head terms."""
-        from bayesian_bm25_spark.sources.webcorpus import generate_pages
+    def test_mapside_partials_equal_salted_streamed_zipf(self, zipf_index):
+        """Map-side partial encode (per-batch numpy sort + varbyte
+        partials, merged after one compressed-bytes shuffle) must be
+        byte-identical to a one-shot encode of each term's whole sorted
+        postings, on a Zipf corpus whose head terms span many batches."""
+        idx = zipf_index(True)
+        want = expected_posting_lists(idx.postings)
+        got = {r["term"]: (r["df"], bytes(r["payload"]))
+               for r in idx.posting_lists.collect()}
+        assert got == want
+        assert max(df for df, _ in got.values()) > ZIPF_N_DOCS // 2
 
-        pages = generate_pages(spark, 3000, seed=11, num_partitions=8)
-        cfg = dict(alpha=1.0, beta=1.0)
-        a = build_index(
-            spark, pages, str(tmp_path / "pl_map"),
-            IndexConfig(mapside_partials=True, **cfg),
-        )
-        b = build_index(
-            spark, pages, str(tmp_path / "pl_salt"),
-            IndexConfig(mapside_partials=False, **cfg),
-        )
-        rows_a = {(r["term"], r["df"], bytes(r["payload"]))
-                  for r in a.posting_lists.collect()}
-        rows_b = {(r["term"], r["df"], bytes(r["payload"]))
-                  for r in b.posting_lists.collect()}
-        assert rows_a == rows_b and len(rows_a) > 0
+    @pytest.mark.parametrize("build_compressed", [True, False])
+    def test_build_artifacts_match_numpy_oracle_zipf(
+        self, zipf_index, build_compressed
+    ):
+        """Every build artifact against the numpy kernel on the local
+        twin of a Zipf corpus big enough for multi-split reads and
+        multi-batch head terms: postings, term_stats and block_max on
+        both term-stats paths (derived from the posting-list merge, or
+        standalone postings scans), plus the varbyte payloads when
+        compressed lists are built."""
+        from collections import Counter
 
-    def test_fused_term_artifacts_equal_standalone_zipf(self, spark, tmp_path):
-        """The fused build (term_stats + block_max derived from the
-        posting-list merge's extra columns — one postings scan instead
-        of three) must produce value- AND schema-identical term_stats /
-        block_max checkpoints, and byte-identical posting lists, vs the
-        standalone per-stage scans, on a Zipf corpus with multi-batch
-        head terms."""
-        import os
+        from bayesian_bm25_spark.functions.xxhash import term_bucket
+        from bayesian_bm25_spark.kernel.postings_codec import decode_posting_list
 
-        from bayesian_bm25_spark.sources.webcorpus import generate_pages
+        idx = zipf_index(build_compressed)
+        cfg = idx.config
+        corpus = [
+            tokenize(r["text"]) for r in generate_rows_local(ZIPF_N_DOCS, seed=11)
+        ]
+        oracle = BM25Oracle()
+        oracle.index(corpus)
+        tf_maps = [Counter(doc) for doc in corpus]
+        want = pd.DataFrame(
+            [
+                (t, d, tf_maps[d][t], oracle.df[t], imp)
+                for t in sorted(oracle.df)
+                for d, imp in sorted(oracle._impacts[t].items())
+            ],
+            columns=["term", "doc_id", "tf", "df", "impact"],
+        )
+        keys = ["term", "doc_id", "tf", "df"]
 
-        pages = generate_pages(spark, 3000, seed=11, num_partitions=8)
-        cfg = dict(alpha=1.0, beta=1.0, base_rate=0.05)
-        a = build_index(
-            spark, pages, str(tmp_path / "fused"),
-            IndexConfig(fused_term_artifacts=True, **cfg),
+        # flat postings: (term, doc_id), tf and df exact, impacts to 1e-12
+        got = (
+            idx.postings.select(*keys, "impact")
+            .toPandas().sort_values(["term", "doc_id"], ignore_index=True)
         )
-        os.environ["BB25_FUSED_ARTIFACTS"] = "0"
-        try:
-            b = build_index(
-                spark, pages, str(tmp_path / "standalone"),
-                IndexConfig(**cfg),
-            )
-        finally:
-            os.environ.pop("BB25_FUSED_ARTIFACTS", None)
-        assert a.term_stats.schema == b.term_stats.schema
-        assert sorted(map(tuple, a.term_stats.collect())) == sorted(
-            map(tuple, b.term_stats.collect())
+        assert got[keys].values.tolist() == want[keys].values.tolist()
+        assert got["impact"].to_numpy() == pytest.approx(
+            want["impact"].to_numpy(), rel=1e-12
         )
-        assert a.block_max.schema == b.block_max.schema
-        assert sorted(map(tuple, a.block_max.collect())) == sorted(
-            map(tuple, b.block_max.collect())
+
+        # term_stats: df, impact bounds and the θ-pass prefix cutoff (the
+        # prefix_len-th largest impact)
+        assert idx.term_stats.schema.simpleString() == (
+            "struct<term:string,term_bucket:int,df:bigint,max_impact:double,"
+            "min_impact:double,prefix_cutoff:double>"
         )
-        pl_a = {(r["term"], r["df"], bytes(r["payload"]))
-                for r in a.posting_lists.collect()}
-        pl_b = {(r["term"], r["df"], bytes(r["payload"]))
-                for r in b.posting_lists.collect()}
-        assert pl_a == pl_b and len(pl_a) == 3000
+        by_term = want.groupby("term")["impact"]
+        want_stats = pd.DataFrame({
+            "df": by_term.size(),
+            "max_impact": by_term.max(),
+            "min_impact": by_term.min(),
+            "prefix_cutoff": by_term.apply(
+                lambda s: np.sort(s.to_numpy())[::-1][: cfg.prefix_len][-1]
+            ),
+        })
+        want_stats["term_bucket"] = [
+            term_bucket(t, cfg.n_buckets) for t in want_stats.index
+        ]
+        got_stats = idx.term_stats.toPandas().set_index("term").sort_index()
+        assert got_stats.index.tolist() == want_stats.index.tolist()
+        assert got_stats[["term_bucket", "df"]].values.tolist() == (
+            want_stats[["term_bucket", "df"]].values.tolist()
+        )
+        for c in ("max_impact", "min_impact", "prefix_cutoff"):
+            assert got_stats[c].to_numpy() == pytest.approx(
+                want_stats[c].to_numpy(), rel=1e-12
+            ), c
+
+        # block_max: max impact per (term, doc_id // block_size)
+        assert idx.block_max.schema.simpleString() == (
+            "struct<term:string,block_id:bigint,block_max_impact:double>"
+        )
+        want_blocks = (
+            want.assign(block_id=want["doc_id"] // cfg.block_size)
+            .groupby(["term", "block_id"])["impact"].max().reset_index()
+        )
+        got_blocks = idx.block_max.toPandas().sort_values(
+            ["term", "block_id"], ignore_index=True
+        )
+        assert got_blocks[["term", "block_id"]].values.tolist() == (
+            want_blocks[["term", "block_id"]].values.tolist()
+        )
+        assert got_blocks["block_max_impact"].to_numpy() == pytest.approx(
+            want_blocks["impact"].to_numpy(), rel=1e-12
+        )
+
+        if not build_compressed:
+            assert idx.posting_lists is None
+            return
+        # posting lists: each payload decodes to exactly the term's flat
+        # postings rows (byte identity: test_mapside_partials_...)
+        flat = dict(list(got.groupby("term")))
+        lists = idx.posting_lists.select("term", "df", "payload").collect()
+        assert sorted(r["term"] for r in lists) == sorted(flat)
+        for r in lists:
+            payload = bytes(r["payload"])
+            d, tf, imp = decode_posting_list(payload)
+            g = flat[r["term"]]
+            assert r["df"] == len(g)
+            np.testing.assert_array_equal(d, g["doc_id"].to_numpy())
+            np.testing.assert_array_equal(tf, g["tf"].to_numpy())
+            np.testing.assert_array_equal(imp, g["impact"].to_numpy())
 
     def test_corpus_stats(self, six_index):
         corpus = [tokenize(d) for d in SIX_DOCS]
@@ -214,12 +299,38 @@ class TestBuild:
         )
         assert viol == 0
 
-    def test_resume_from_checkpoint(self, spark, six_index):
+    def test_resume_from_checkpoint(self, spark, six_index, tmp_path):
         # a fresh build over the same path must reuse checkpoints (no pages needed)
         idx2 = load_index(spark, six_index.path)
         assert idx2.n_docs == 6
         assert idx2.params.alpha == six_index.params.alpha
         assert idx2.postings.count() == six_index.postings.count()
+
+        # an index written before the build-path options were removed
+        # still loads: its params.json config carries their keys
+        import json
+        import shutil
+
+        removed = dict(
+            mapside_partials=True, checkpoint_segments=False,
+            fused_term_artifacts=True, local_tf=True,
+            broadcast_vocab_max=0, n_salts=8,
+        )
+        assert IndexConfig.from_dict(
+            {**IndexConfig().to_dict(), **removed}
+        ) == IndexConfig()
+        old_path = str(tmp_path / "old_idx")
+        shutil.copytree(six_index.path, old_path)
+        with open(f"{old_path}/params.json") as f:
+            meta = json.load(f)
+        meta["config"].update(removed)
+        with open(f"{old_path}/params.json", "w") as f:
+            json.dump(meta, f)
+        old = load_index(spark, old_path)
+        assert old.config == six_index.config
+        assert old.params == six_index.params
+        assert old.postings.count() == six_index.postings.count()
+        assert old.posting_lists.count() == six_index.posting_lists.count()
 
 
 class TestQuerySixDocs:

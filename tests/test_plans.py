@@ -211,6 +211,27 @@ class TestRegistryConsistency:
         assert set(bench.HEADLINE) <= set(SPARK_QUERIES)
         assert set(ORACLE_SQL) <= set(SPARK_QUERIES)
 
+    def test_no_env_switches_in_package(self):
+        """No behaviour of the package is switched by a ``BB25_*``
+        process-environment variable: options live in IndexConfig or
+        call arguments, one code path per behaviour."""
+        import os
+
+        import bayesian_bm25_spark
+
+        root = os.path.dirname(bayesian_bm25_spark.__file__)
+        hits = []
+        for d, _, files in os.walk(root):
+            for name in files:
+                if name.endswith(".py"):
+                    fp = os.path.join(d, name)
+                    with open(fp, encoding="utf-8") as f:
+                        hits += [
+                            f"{os.path.relpath(fp, root)}:{i}"
+                            for i, line in enumerate(f, 1) if "BB25_" in line
+                        ]
+        assert hits == []
+
     def test_bucket_prune_dataframe_path_is_lazy_semi_join(self, spark, plan_idx):
         """DataFrame-resident query batches prune via a broadcast LEFT
         SEMI join on term_bucket (DPP-prunable at the partitioned scan)
@@ -271,33 +292,3 @@ class TestPostingsWriteSizing:
             cur = _postings_write_tasks(gb << 30, 32)
             assert cur >= prev
             prev = cur
-
-
-class TestDfJoinBroadcast:
-    def test_small_vocab_df_join_is_broadcast(self, spark):
-        """broadcast_vocab_max>0 forces a broadcast of the measured
-        small df aggregate (no tf exchange); the DEFAULT keeps the
-        shuffle join because its term-hash partitioning doubles as the
-        term-clustered write layout (r6 measured negative)."""
-        from bayesian_bm25_spark.operators.index_build import (
-            IndexConfig,
-            compute_postings,
-        )
-        from bayesian_bm25_spark.sources.webcorpus import generate_pages
-        from bayesian_bm25_spark.operators.index_build import tokenize_pages
-
-        docs = tokenize_pages(generate_pages(spark, 200, seed=3))
-        out = compute_postings(
-            docs, 200, 100.0, IndexConfig(broadcast_vocab_max=100000)
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        # the forced path measured the vocab: the aggregate is cached
-        assert getattr(out, "_bb25_df_pt", None) is not None
-        out._bb25_df_pt.unpersist()
-        # the default keeps the shuffle join: its term-hash output
-        # partitioning IS the term-clustered layout the postings write
-        # depends on (measured 3x downstream-scan regression without
-        # it — BENCH/BASELINE.md r6 addendum) — no persisted aggregate
-        out2 = compute_postings(docs, 200, 100.0, IndexConfig())
-        assert getattr(out2, "_bb25_df_pt", None) is None
