@@ -284,7 +284,7 @@ LIMIT 100
 
 def q_bm25_topk(spark, sf_dir):
     docs, postings, _, _ = _corpus_postings(spark, sf_dir)
-    scored = Q.score_queries(postings, _doc_queries(docs), prune_buckets=False)
+    scored = Q.score_queries(postings, _doc_queries(docs))
     return _ranked_topk(scored, "score").select(
         "query_id", "rank", "doc_id", F.round("score", 6).alias("score_r")
     )
@@ -304,7 +304,7 @@ SELECT query_id, rank, doc_id, score_r FROM ranked WHERE rank <= 10
 
 def q_bm25_topk_robertson(spark, sf_dir):
     docs, postings, _, _ = _corpus_postings(spark, sf_dir, method="robertson")
-    scored = Q.score_queries(postings, _doc_queries(docs), prune_buckets=False)
+    scored = Q.score_queries(postings, _doc_queries(docs))
     return _ranked_topk(scored, "score").select(
         "query_id", "rank", "doc_id", F.round("score", 6).alias("score_r")
     )
@@ -322,7 +322,7 @@ def q_probability_topk(spark, sf_dir):
     docs, postings, _, avgdl = _corpus_postings(spark, sf_dir)
     params = TransformParams(alpha=P_ALPHA, beta=P_BETA, base_rate=P_BR)
     scored = Q.with_probability(
-        Q.score_queries(postings, _doc_queries(docs), prune_buckets=False), params, avgdl
+        Q.score_queries(postings, _doc_queries(docs)), params, avgdl
     )
     return _ranked_topk(scored, "score").select(
         "query_id", "rank", "doc_id", F.round("probability", 6).alias("prob_r")
@@ -1577,7 +1577,7 @@ def q_multifield_topk(spark, sf_dir):
         row = fdocs.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("a")).collect()[0]
         postings = compute_postings(fdocs, int(row["n"]), float(row["a"]), IndexConfig())
         parts[name] = Q.with_probability(
-            Q.score_queries(postings, queries, prune_buckets=False), params, float(row["a"])
+            Q.score_queries(postings, queries), params, float(row["a"])
         ).select("query_id", "doc_id", F.col("probability").alias(f"p_{name}"))
     cands = (
         parts["title"]
@@ -1683,7 +1683,7 @@ def _two_signal_frames(spark, sf_dir):
     """Sparse = BM25 scored set; dense pseudo-cosine from doc_id (both
     engines compute identical values)."""
     docs, postings, _, _ = _corpus_postings(spark, sf_dir)
-    sparse = Q.score_queries(postings, _doc_queries(docs), prune_buckets=False).select(
+    sparse = Q.score_queries(postings, _doc_queries(docs)).select(
         "query_id", "doc_id", "score"
     )
     dense = (
@@ -1891,7 +1891,7 @@ def q_logodds_posterior_hybrid(spark, sf_dir):
 
     docs, postings, _, avgdl = _corpus_postings(spark, sf_dir)
     sparse = Q.score_queries(
-        postings, _doc_queries(docs), prune_buckets=False
+        postings, _doc_queries(docs)
     ).select("query_id", "doc_id", "score", "tf_match", "doc_len")
     dense = (
         _doc_queries(docs)
@@ -2911,7 +2911,7 @@ def q_hybrid_balanced_topk(spark, sf_dir):
     docs, postings, _, avgdl = _corpus_postings(spark, sf_dir)
     params = TransformParams(alpha=P_ALPHA, beta=P_BETA, base_rate=P_BR)
     sparse = Q.with_probability(
-        Q.score_queries(postings, _doc_queries(docs), prune_buckets=False), params, avgdl
+        Q.score_queries(postings, _doc_queries(docs)), params, avgdl
     ).select("query_id", "doc_id", "probability")
 
     emb = _read(spark, sf_dir, "embeddings")

@@ -948,43 +948,16 @@ def _estimate_params(
     scored = Q.score_queries(
         postings, qdf, n_buckets=cfg.n_buckets, co_partition=False,
         driver_terms=sorted({t for _, ts in queries for t in ts}),
-        # α/β/base-rate read only the score column — skip the
-        # tf_match/doc_len aggregates (identical scores, ~40% less agg
-        # state; params is the 1M build's critical-path phase)
-        score_only=True,
+    ).select(
+        # α/β/base-rate read only the score: Catalyst then drops the
+        # tf_match/doc_len aggregates (params is the 1M build's
+        # critical-path phase)
+        "query_id", "score",
     ).where(F.col("score") > 0)
 
-    if (
+    if n_docs >= _PARAMS_COLLECT_MAX and (
         cfg.base_rate_method == "percentile" or cfg.base_rate != "auto"
-    ) and n_docs < _PARAMS_COLLECT_MAX:
-        # small-corpus fast path: ONE Arrow collect of the (query_id,
-        # score) sample replaces the distributed chain's ~5 sequential
-        # jobs (cache materialize + stddev agg + 3-job exact percentile
-        # + window base-rate).  Inside the build's parallel group each
-        # of those jobs queued behind the bulk stages' tasks, so the
-        # params phase paid ~2-3× its standalone wall in scheduling
-        # latency alone.  The driver math IS the reference protocol
-        # (scorer.py:313-337) — the same kernel estimators the
-        # mixture/elbow branch already collects for — and the sample is
-        # bounded by the 50 pseudo-queries' nonzero scores.  Above the
-        # cutoff the fully distributed path below is unchanged.
-        pdf = scored.select("query_id", "score").toPandas()
-        if len(pdf) == 0:
-            return TransformParams(alpha=cfg.alpha or 1.0, beta=cfg.beta or 0.0)
-        per_query_scores = [
-            g.to_numpy(dtype=np.float64)
-            for _, g in pdf.groupby("query_id", sort=True)["score"]
-        ]
-        alpha, beta = estimate_alpha_beta(per_query_scores, cfg.alpha, cfg.beta)
-        if cfg.base_rate == "auto":
-            base_rate = estimate_base_rate(per_query_scores, n_docs, "percentile")
-        elif isinstance(cfg.base_rate, (int, float)):
-            base_rate = float(cfg.base_rate)
-        else:
-            base_rate = None
-        return TransformParams(alpha=alpha, beta=beta, base_rate=base_rate)
-
-    if cfg.base_rate_method == "percentile" or cfg.base_rate != "auto":
+    ):
         # fully distributed path: β = exact median, α = 1/std_pop of the
         # pooled nonzero sample; base-rate = mean over queries of
         # frac(scores ≥ per-query exact 95th pct)/n_docs.  Spark's exact
@@ -1047,11 +1020,15 @@ def _estimate_params(
         finally:
             scored.unpersist()
 
-    # mixture/elbow estimators are inherently whole-sample iterative —
-    # Arrow-collect the per-query nonzero scores (reference protocol;
-    # fine for the sampled 50 queries, heavy only at extreme corpus
-    # sizes where "percentile" is the method to use)
-    pdf = scored.select("query_id", "score").toPandas()
+    # collect path: ONE Arrow collect of the (query_id, score) sample and
+    # the reference's driver-side estimators (scorer.py:313-337).  Below
+    # the cutoff it replaces the distributed chain's ~5 sequential jobs,
+    # which queued behind the build's parallel-group stages; mixture/elbow
+    # are whole-sample iterative, so they collect at any corpus size.
+    # The sample is bounded by the 50 pseudo-queries' nonzero scores.
+    pdf = scored.toPandas()
+    if len(pdf) == 0:
+        return TransformParams(alpha=cfg.alpha or 1.0, beta=cfg.beta or 0.0)
     per_query_scores = [
         g.to_numpy(dtype=np.float64)
         for _, g in pdf.groupby("query_id", sort=True)["score"]

@@ -69,7 +69,7 @@ def evaluate_fusion_matrix(
         IndexConfig(base_rate="auto", build_compressed=False),
     )
 
-    scored = Q.score_queries(idx.postings, ds.queries, prune_buckets=False)
+    scored = Q.score_queries(idx.postings, ds.queries)
     # probability VARIANTS by base-rate strategy — the reference's
     # matrix distinguishes scorer (no br) / scorer_br (percentile) /
     # scorer_mix / scorer_elbow (hybrid_beir.py:1831-1846); each is the
@@ -1015,7 +1015,7 @@ def evaluate_calibration_by_base_rate(
         IndexConfig(base_rate="auto", build_compressed=False),
     )
 
-    scored = Q.score_queries(idx.postings, ds.queries, prune_buckets=False)
+    scored = Q.score_queries(idx.postings, ds.queries)
     labeled = (
         scored.join(
             ds.qrels.select("query_id", "doc_id", "relevance"),

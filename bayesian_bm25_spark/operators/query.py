@@ -118,18 +118,10 @@ def score_queries(
     queries: DataFrame,
     *,
     n_buckets: int | None = None,
-    prune_buckets: bool = True,
     co_partition: bool = True,
-    num_partitions: int | None = None,
     driver_terms: list[str] | None = None,
-    score_only: bool = False,
 ) -> DataFrame:
     """(query_id, doc_id, score, tf_match, doc_len) for every matching doc.
-
-    ``score_only=True`` drops the tf_match / doc_len aggregates (callers
-    that never read them — parameter estimation needs only the score
-    column): ~40% less per-group aggregation state and narrower partial
-    rows through the agg exchange.  The score values are identical.
 
     Inner-join semantics: docs with score 0 never appear (the reference's
     ``scores > 0`` active mask falls out of the join for free,
@@ -145,33 +137,19 @@ def score_queries(
     ~20× larger on Zipf query batches, and the thing that stops scaling
     when it hits disk).  The only remaining exchange is the tiny
     rank-limited window input.
+
+    Column pruning is Catalyst's: the scan reads term, doc_id, doc_len
+    and impact only, and selecting (query_id, score) leaves a sum-only
+    aggregate (test_plans pins both).
     """
     qt = query_terms(queries)
     src = postings
-    if prune_buckets and n_buckets and "term_bucket" in postings.columns:
+    if n_buckets and "term_bucket" in postings.columns:
         src = prune_query_terms_buckets(postings, qt, n_buckets, driver_terms)
-    # project to the four columns scoring reads BEFORE the exchange /
-    # join probe (guide §2.3): tf/df/term_bucket otherwise ride the
-    # doc_id repartition and widen every probe row.  Projection
-    # preserves partitioning, so a prepartition_for_scoring frame keeps
-    # its exchange-free layout (and the in-memory columnar cache prunes
-    # to the selected columns).
-    score_cols = (
-        ["term", "doc_id", "impact"]
-        if score_only
-        else ["term", "doc_id", "impact", "doc_len"]
-    )
-    if set(score_cols) <= set(src.columns):
-        src = src.select(*score_cols)
     if co_partition:
-        p = num_partitions or postings.sparkSession.sparkContext.defaultParallelism * 2
+        p = postings.sparkSession.sparkContext.defaultParallelism * 2
         src = src.repartition(p, "doc_id")
-    joined = src.join(F.broadcast(qt), "term")
-    if score_only:
-        return joined.groupBy("query_id", "doc_id").agg(
-            F.sum(F.col("impact") * F.col("qtf")).alias("score")
-        )
-    return joined.groupBy("query_id", "doc_id").agg(
+    return src.join(F.broadcast(qt), "term").groupBy("query_id", "doc_id").agg(
         F.sum(F.col("impact") * F.col("qtf")).alias("score"),
         F.count(F.lit(1)).alias("tf_match"),
         F.first("doc_len").alias("doc_len"),
@@ -267,6 +245,21 @@ def get_probabilities(
     )
 
 
+def _impacts_nonnegative(term_stats: DataFrame, declared: bool | None) -> bool:
+    """The pruned plans' sign precondition: ``declared`` if given, else
+    the build-time ``term_stats.min_impact`` witness.  Without either it
+    raises — pruning on negative robertson impacts drops true top-k docs."""
+    if declared is not None:
+        return declared
+    if "min_impact" not in term_stats.columns:
+        raise ValueError(
+            "term_stats has no min_impact column; pass impacts_nonnegative "
+            "explicitly (robertson impacts can be negative)"
+        )
+    lo = term_stats.agg(F.min("min_impact")).collect()[0][0]
+    return lo is None or float(lo) >= 0.0
+
+
 def retrieve_maxscore(
     postings: DataFrame,
     queries: DataFrame,
@@ -275,7 +268,6 @@ def retrieve_maxscore(
     avgdl: float,
     k: int = 10,
     n_buckets: int | None = None,
-    num_partitions: int | None = None,
     impacts_nonnegative: bool | None = None,
     driver_terms: list[str] | None = None,
     src_partitioned: bool = False,
@@ -315,20 +307,10 @@ def retrieve_maxscore(
     SAFETY: both the θ pass (partial sums as lower bounds) and the
     essential-term cumulative bound require NON-NEGATIVE impacts.
     Robertson idf is negative for df > ~N/2 (lucene/atire never are), so
-    when ``impacts_nonnegative`` is False — or is None and the
-    ``term_stats.min_impact`` column (written at build time) shows a
-    negative minimum — the call routes to the exhaustive ``retrieve``
-    plan, which is exact for any sign.
+    when the sign check (``_impacts_nonnegative``) fails the call routes
+    to the exhaustive ``retrieve`` plan, which is exact for any sign.
     """
-    if impacts_nonnegative is None:
-        if "min_impact" in term_stats.columns:
-            row = term_stats.agg(F.min("min_impact")).collect()[0]
-            impacts_nonnegative = row[0] is None or float(row[0]) >= 0.0
-        else:
-            # legacy index without the stat: assume the default (lucene)
-            # method; robertson users must pass the flag explicitly
-            impacts_nonnegative = True
-    if not impacts_nonnegative:
+    if not _impacts_nonnegative(term_stats, impacts_nonnegative):
         return retrieve(
             postings, queries, params, avgdl,
             k=k, n_buckets=n_buckets, driver_terms=driver_terms,
@@ -342,16 +324,11 @@ def retrieve_maxscore(
     # candidate set per partition (no-spill build side) — smaller
     # partitions keep each task's hash map well under its execution-
     # memory share on small-heap executors
-    p = num_partitions or spark.sparkContext.defaultParallelism * 4
+    p = spark.sparkContext.defaultParallelism * 4
     qt = query_terms(queries)
     src = postings
     if n_buckets and "term_bucket" in postings.columns:
         src = prune_query_terms_buckets(postings, qt, n_buckets, driver_terms)
-    # narrow to the scoring columns before every downstream pass /
-    # exchange (guide §2.3) — same projection score_queries applies
-    score_cols = ["term", "doc_id", "impact", "doc_len"]
-    if set(score_cols) <= set(src.columns):
-        src = src.select(*score_cols)
 
     # -- A: θ from impact-ordered prefixes ---------------------------------
     # restrict term_stats to the query batch FIRST (broadcast the tiny
@@ -425,6 +402,10 @@ def retrieve_maxscore(
     )
 
 
+# corpus size (docs) from which retrieve_auto routes to MaxScore
+_MAXSCORE_MIN_DOCS = 250_000
+
+
 def retrieve_auto(
     postings: DataFrame,
     queries: DataFrame,
@@ -434,10 +415,9 @@ def retrieve_auto(
     n_docs: int,
     k: int = 10,
     n_buckets: int | None = None,
-    maxscore_min_docs: int = 250_000,
     driver_terms: list[str] | None = None,
     src_partitioned: bool = False,
-    **maxscore_kw,
+    impacts_nonnegative: bool | None = None,
 ) -> DataFrame:
     """Cost-based routing between the exhaustive co-partitioned scan and
     MaxScore pruning — the engine's AQE-style physical choice.
@@ -449,15 +429,15 @@ def retrieve_auto(
     BENCH/BASELINE.md round-3 notes): at 50k docs the single-join
     exhaustive plan is 2-3× FASTER (the fixed passes dominate); at 1M
     docs MaxScore is ~1.3× faster warm and ~3× faster cold (the
-    exhaustive agg spills).  The default threshold sits between the two
-    measured endpoints; tune per corpus/row-width.  Both paths are
-    rank-identical (pytest-enforced), so routing never changes
+    exhaustive agg spills).  Corpora from ``_MAXSCORE_MIN_DOCS`` docs, a
+    constant between the two measured endpoints, route to MaxScore.  Both
+    paths are rank-identical (pytest-enforced), so routing never changes
     results."""
-    if n_docs >= maxscore_min_docs:
+    if n_docs >= _MAXSCORE_MIN_DOCS:
         return retrieve_maxscore(
             postings, queries, term_stats, params, avgdl,
-            k=k, n_buckets=n_buckets, driver_terms=driver_terms,
-            src_partitioned=src_partitioned, **maxscore_kw,
+            k=k, n_buckets=n_buckets, impacts_nonnegative=impacts_nonnegative,
+            driver_terms=driver_terms, src_partitioned=src_partitioned,
         )
     return retrieve(
         postings, queries, params, avgdl,
@@ -477,21 +457,6 @@ def term_wand_bounds(term_stats: DataFrame, params: TransformParams, p_max: floa
         "wand_ub",
         C.wand_upper_bound(
             F.col("max_impact"),
-            alpha=params.alpha,
-            beta=params.beta,
-            base_rate=params.base_rate,
-            p_max=p_max,
-        ),
-    )
-
-
-def block_bayesian_bounds(block_max: DataFrame, params: TransformParams, p_max: float = 0.9) -> DataFrame:
-    """block_max + ``block_ub``: per-(term, block) Bayesian bound
-    (reference Corollary 7.4.2) — tighter than the term-level WAND bound."""
-    return block_max.withColumn(
-        "block_ub",
-        C.wand_upper_bound(
-            F.col("block_max_impact"),
             alpha=params.alpha,
             beta=params.beta,
             base_rate=params.base_rate,
@@ -524,13 +489,7 @@ def retrieve_threshold(
     guard as ``retrieve_maxscore``: negative-impact indexes skip the
     query-level gate and score every live query exactly.
     """
-    if impacts_nonnegative is None:
-        if "min_impact" in term_stats.columns:
-            row = term_stats.agg(F.min("min_impact")).collect()[0]
-            impacts_nonnegative = row[0] is None or float(row[0]) >= 0.0
-        else:
-            impacts_nonnegative = True
-    if not impacts_nonnegative:
+    if not _impacts_nonnegative(term_stats, impacts_nonnegative):
         scored = with_probability(
             score_queries(postings, queries, n_buckets=n_buckets), params, avgdl
         )

@@ -272,6 +272,33 @@ class TestBuild:
         assert six_index.params.beta == pytest.approx(params.beta, rel=1e-9)
         assert six_index.params.base_rate == pytest.approx(params.base_rate, rel=1e-9)
 
+    def test_params_distributed_chain_equals_collect_zipf(
+        self, spark, zipf_index, monkeypatch
+    ):
+        """Params estimation's driver collect and its distributed chain
+        (corpora from ``_PARAMS_COLLECT_MAX`` docs) estimate the same
+        α, β and base rate from the same pseudo-query sample."""
+        import os
+
+        from bayesian_bm25_spark.operators import index_build
+
+        idx = zipf_index(True)
+        docs = spark.read.parquet(os.path.join(idx.path, "docs"))
+        cfg = IndexConfig(base_rate="auto")
+
+        def estimate():
+            return index_build._estimate_params(
+                spark, docs, idx.postings, cfg, idx.n_docs
+            )
+
+        collected = estimate()
+        monkeypatch.setattr(index_build, "_PARAMS_COLLECT_MAX", 0)
+        distributed = estimate()
+        for name in ("alpha", "beta", "base_rate"):
+            assert getattr(distributed, name) == pytest.approx(
+                getattr(collected, name), rel=1e-9
+            ), name
+
     def test_compressed_lists_roundtrip(self, six_index, six_oracle):
         from bayesian_bm25_spark.kernel.postings_codec import decode_posting_list
 
@@ -525,7 +552,7 @@ class TestMaxScore:
         p = {key(r): (r["doc_id"], r["score"], r["probability"]) for r in pruned}
         assert e == p
 
-    def test_retrieve_auto_routes_and_is_identical(self, six_index):
+    def test_retrieve_auto_routes_and_is_identical(self, six_index, monkeypatch):
         """retrieve_auto = cost-based routing; results identical on both
         routes (the routes themselves are rank-identical, so routing
         never changes answers)."""
@@ -537,10 +564,11 @@ class TestMaxScore:
         key = lambda r: (r["query_id"], r["rank"])
         want = {key(r): (r["doc_id"], r["score"]) for r in base}
         for threshold in (10**9, 0):  # exhaustive route, maxscore route
+            monkeypatch.setattr(Q, "_MAXSCORE_MIN_DOCS", threshold)
             got = Q.retrieve_auto(
                 six_index.postings, qdf, six_index.term_stats,
                 six_index.params, six_index.avgdl, n_docs=six_index.n_docs,
-                k=3, maxscore_min_docs=threshold,
+                k=3,
             ).collect()
             assert {key(r): (r["doc_id"], r["score"]) for r in got} == want
 
@@ -658,3 +686,19 @@ class TestRobertsonPrunedPaths:
         ).collect()
         expect = {(r["query_id"], r["doc_id"]) for r in full if r["probability"] >= thr}
         assert {(r["query_id"], r["doc_id"]) for r in got} == expect
+
+    def test_pruned_paths_raise_without_sign_witness(self, rob_index):
+        """Without ``min_impact`` and without ``impacts_nonnegative`` the
+        impact sign is unknown: both pruned paths must refuse rather than
+        prune over (here negative) robertson impacts."""
+        idx = rob_index
+        qdf = queries_to_df(idx.spark, [["common", "rare3"], ["common"]])
+        stats = idx.term_stats.drop("min_impact")
+        with pytest.raises(ValueError, match="min_impact"):
+            Q.retrieve_maxscore(
+                idx.postings, qdf, stats, idx.params, idx.avgdl, k=5
+            )
+        with pytest.raises(ValueError, match="min_impact"):
+            Q.retrieve_threshold(
+                idx.postings, qdf, stats, idx.params, idx.avgdl, threshold=0.05
+            )

@@ -8,6 +8,8 @@ property that makes the operator survive a 100× scale-up:
   hash-partitioned by doc_id first; HashPartitioning on a subset of the
   grouping keys satisfies the agg's distribution requirement)
 - the postings scan is partition-pruned to query-term buckets
+- Catalyst column-prunes scoring: the scan reads the four scoring
+  columns, and a (query_id, score) projection leaves a sum-only agg
 - the θ-pass cutoff build compiles to WindowGroupLimit (map-side top-B,
   no Zipf-head sort in one task)
 - the query side of the scoring join is a broadcast, never a shuffle
@@ -43,7 +45,7 @@ class TestScoringPlan:
         qdf = queries_to_df(plan_idx.spark, [["w1", "w2"], ["w3"]])
         import re
 
-        plan = plan_of(Q.score_queries(plan_idx.postings, qdf, prune_buckets=False))
+        plan = plan_of(Q.score_queries(plan_idx.postings, qdf))
         # the big-side agg over (query_id, doc_id) reuses the explicit
         # doc_id repartition — no exchange keyed on the full agg key.
         # (the query-TERMS side has its own tiny exchange before the
@@ -65,7 +67,7 @@ class TestScoringPlan:
         try:
             qdf = queries_to_df(spark, [["w1", "w2"], ["w3"]])
             scored = Q.score_queries(
-                src, qdf, prune_buckets=False, co_partition=False
+                src, qdf, co_partition=False
             )
             plan = plan_of(scored)
             assert "InMemoryTableScan" in plan
@@ -80,7 +82,7 @@ class TestScoringPlan:
             base = {
                 (r["query_id"], r["doc_id"], round(r["score"], 9))
                 for r in Q.score_queries(
-                    plan_idx.postings, qdf, prune_buckets=False
+                    plan_idx.postings, qdf
                 ).collect()
             }
             got = {
@@ -103,7 +105,7 @@ class TestScoringPlan:
         try:
             qdf = queries_to_df(spark, [["w1", "w2"], ["w3"]])
             scored = Q.score_queries(
-                src, qdf, prune_buckets=False, co_partition=False
+                src, qdf, co_partition=False
             )
             plan = plan_of(scored)
             assert "InMemoryTableScan" in plan
@@ -113,9 +115,43 @@ class TestScoringPlan:
         finally:
             src.unpersist()
 
+    def test_postings_scan_reads_scoring_columns_only(self, plan_idx):
+        """Catalyst prunes the postings scan to the four columns scoring
+        reads: tf and df never leave the parquet files at query time."""
+        import re
+
+        qdf = queries_to_df(plan_idx.spark, [["w1", "w2"], ["w3"]])
+        plan = plan_of(Q.score_queries(plan_idx.postings, qdf))
+        schemas = set(re.findall(r"ReadSchema: struct<([^>]*)>", plan))
+        postings = [s for s in schemas if "impact:" in s]
+        assert len(postings) == 1, schemas
+        cols = {f.split(":")[0] for f in postings[0].split(",")}
+        assert cols == {"term", "doc_id", "doc_len", "impact"}, postings
+
+    def test_score_projection_leaves_sum_only_aggregate(self, plan_idx):
+        """Selecting (query_id, score) — what params estimation reads —
+        drops the tf_match/doc_len aggregates from the executed scoring
+        aggregate: no count(1), no first(doc_len)."""
+        import re
+
+        qdf = queries_to_df(plan_idx.spark, [["w1", "w2"], ["w3"]])
+        scored = Q.score_queries(plan_idx.postings, qdf).select("query_id", "score")
+        scored.collect()
+        plan = plan_of(scored)
+        aggs = re.findall(
+            r"HashAggregate\(keys=\[query_id#\d+L?, doc_id#\d+L?\], "
+            r"functions=\[(.*)\]",
+            plan,
+        )
+        assert aggs, plan
+        for functions in aggs:
+            assert "sum(" in functions
+            assert "count(1)" not in functions
+            assert "first(doc_len" not in functions
+
     def test_query_side_is_broadcast(self, plan_idx):
         qdf = queries_to_df(plan_idx.spark, [["w1"]])
-        plan = plan_of(Q.score_queries(plan_idx.postings, qdf, prune_buckets=False))
+        plan = plan_of(Q.score_queries(plan_idx.postings, qdf))
         assert "BroadcastExchange" in plan
         assert "SortMergeJoin" not in plan
 
@@ -172,7 +208,7 @@ class TestCodegenOnlyOperators:
     def test_probability_path_pure_column(self, plan_idx):
         qdf = queries_to_df(plan_idx.spark, [["w1"]])
         scored = Q.with_probability(
-            Q.score_queries(plan_idx.postings, qdf, prune_buckets=False),
+            Q.score_queries(plan_idx.postings, qdf),
             plan_idx.params,
             plan_idx.avgdl,
         )
